@@ -54,16 +54,6 @@ def _bounded_collect(df: DataFrame, cap: int, what: str) -> list:
     return rows
 
 
-def _dot(a, b):
-    return F.aggregate(F.zip_with(a, b, lambda x, y: x * y),
-                       F.lit(0.0), lambda acc, v: acc + v)
-
-
-def _norm(a):
-    return F.sqrt(F.aggregate(F.transform(a, lambda x: x * x),
-                              F.lit(0.0), lambda acc, v: acc + v))
-
-
 def with_cosine(df: DataFrame, a: str, b: str,
                 out: str = "cosine") -> DataFrame:
     """Row-wise cosine of two array columns via a vectorized Arrow UDF

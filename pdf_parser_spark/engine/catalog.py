@@ -29,6 +29,7 @@ manifest-last discipline as engine.checkpoint).
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import uuid
@@ -306,8 +307,14 @@ def _write_manifest(table_dir: str, seq: int, snap_id: str,
             orphan = claim + "." + _uuid.uuid4().hex
             try:
                 os.rename(claim, orphan)
-                os.link(tmp, claim)  # retry the CAS once
-                os.remove(orphan)
+                try:
+                    os.link(tmp, claim)  # retry the CAS once
+                finally:
+                    # the renamed stale claim goes whether or not the
+                    # retry won (a competing writer may have linked
+                    # .seq-N between our rename and link)
+                    with contextlib.suppress(FileNotFoundError):
+                        os.remove(orphan)
             except (FileNotFoundError, FileExistsError):
                 os.remove(tmp)  # lost the reclamation race too
                 raise CommitConflict(

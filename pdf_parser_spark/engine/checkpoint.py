@@ -117,20 +117,15 @@ def run_checkpointed(spark: SparkSession, pages: DataFrame, root: str,
     of iterations), not rows — each iteration is one distributed job over
     ~total/chunks of the data. Commit granularity is the recovery unit;
     at 10^12 docs you'd size chunks so one chunk ~= 10-30 min of work."""
-    cols = ["url", "html"] + (["password"] if "password" in pages.columns
-                              else [])
     # spread_big: deterministic round-robin part_ids for oversized docs
     # (guaranteed <= ceil(k/n) per partition vs the hash stream's
     # birthday bound — measured 1.7-2.8x straggler win in
     # tools/skew_bench.py); costs a window over the big subset, so it's
     # opt-in for corpora whose tail is heavy enough to matter
     _check_layout(root, _layout_id(spread_big, n_partitions))
-    if spread_big:
-        keyed = partitioning.spread_oversized(pages.select(*cols),
-                                              n_partitions)
-    else:
-        keyed = partitioning.with_partition_key(pages.select(*cols),
-                                                n_partitions)
+    keyed = job.keyed_input(pages, n_partitions,
+                            key=(partitioning.spread_oversized if spread_big
+                                 else partitioning.with_partition_key))
 
     done = set(completed_partitions(spark, root, snapshot_id))
     todo = [p for p in range(n_partitions) if p not in done]
@@ -158,8 +153,7 @@ def run_checkpointed(spark: SparkSession, pages: DataFrame, root: str,
             shuffled = partitioning.repartition_for_extract(
                 subset, max(len(chunk),
                             spark.sparkContext.defaultParallelism))
-            extracted = shuffled.mapInPandas(job._extract_batches,
-                                             job.EXTRACTED_SCHEMA)
+            extracted = job.extract_keyed(shuffled)
             # One pass over the data: cache the chunk output, derive
             # lineage from it, then release.
             extracted = extracted.withColumn(

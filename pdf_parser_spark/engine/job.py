@@ -69,43 +69,17 @@ def _passwords(pdf: pd.DataFrame) -> pd.Series:
     return pd.Series([None] * len(pdf))
 
 
-def _extract_batches_with_spans(batches: Iterator[pd.DataFrame]
-                                ) -> Iterator[pd.DataFrame]:
-    """Variant kernel emitting the spans array column (nested Arrow)."""
-    for pdf in batches:
-        rows = []
-        part_ids = (pdf["part_id"] if "part_id" in pdf.columns
-                    else pd.Series([-1] * len(pdf)))
-        for url, blob, part_id, pw in zip(pdf["url"], pdf["html"],
-                                          part_ids, _passwords(pdf)):
-            data = bytes(blob) if blob is not None else None
-            r = extract_document(url, data, with_spans=True, password=pw)
-            rows.append({
-                "url": r.url,
-                "part_id": int(part_id),
-                "doc_type": r.doc_type,
-                "text": r.text,
-                "body_text": r.body_text,
-                "n_pages": r.n_pages,
-                "n_blocks": r.n_blocks,
-                "n_tables": r.n_tables,
-                "bytes_in": len(data) if data is not None else 0,
-                "ok": r.error_kind is None,
-                "error_kind": r.error_kind,
-                "error_message": r.error_message,
-                "title": r.metadata.get("title"),
-                "spans": r.spans,
-            })
-        yield pd.DataFrame(rows,
-                           columns=[f.name for f in EXTRACTED_SPANS_SCHEMA])
-
-
-def _extract_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas kernel. Runs on executors; must stay importable from
-    the shipped package (spark-submit --py-files)."""
+def _extract_batches(batches: Iterator[pd.DataFrame],
+                     with_spans: bool = False) -> Iterator[pd.DataFrame]:
+    """mapInPandas kernel: the one per-document batch loop. Runs on
+    executors; must stay importable from the shipped package
+    (spark-submit --py-files). ``with_spans`` adds the nested spans
+    column of EXTRACTED_SPANS_SCHEMA."""
     # NB: gc.disable()/threshold tuning was measured here and LOST to the
     # default collector (pandas frames carry cycles; uncollected garbage
     # slows the allocator more than GC costs). Keep default GC.
+    schema = EXTRACTED_SPANS_SCHEMA if with_spans else EXTRACTED_SCHEMA
+    columns = [f.name for f in schema]
     for pdf in batches:
         rows = []
         part_ids = (pdf["part_id"] if "part_id" in pdf.columns
@@ -113,8 +87,9 @@ def _extract_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for url, blob, part_id, pw in zip(pdf["url"], pdf["html"],
                                           part_ids, _passwords(pdf)):
             data = bytes(blob) if blob is not None else None
-            r = extract_document(url, data, password=pw)
-            rows.append({
+            r = extract_document(url, data, with_spans=with_spans,
+                                 password=pw)
+            row = {
                 "url": r.url,
                 "part_id": int(part_id),
                 "doc_type": r.doc_type,
@@ -128,41 +103,60 @@ def _extract_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
                 "error_kind": r.error_kind,
                 "error_message": r.error_message,
                 "title": r.metadata.get("title"),
-            })
-        yield pd.DataFrame(rows, columns=[f.name for f in EXTRACTED_SCHEMA])
+            }
+            if with_spans:
+                row["spans"] = r.spans
+            rows.append(row)
+        yield pd.DataFrame(rows, columns=columns)
 
 
-def run_extract(pages: DataFrame, n_partitions: int | None = None,
-                shuffle: bool = False,
-                with_spans: bool = False) -> DataFrame:
-    """pages(url, warc_ts, html, text, lang) -> extracted DataFrame.
+def _extract_batches_with_spans(batches: Iterator[pd.DataFrame]
+                                ) -> Iterator[pd.DataFrame]:
+    """_extract_batches with the spans column; a named function (not a
+    functools.partial) so the plan's MapInPandas node keeps its name."""
+    return _extract_batches(batches, with_spans=True)
 
-    Plan shape: scan -> project(url, html) + part_id -> mapInPandas.
-    Column pruning drops warc_ts/text/lang so only the bytes that feed
-    the parser cross the Arrow boundary.
 
-    ``shuffle=False`` (default): extraction runs in the INPUT's partitions
-    — per-document parsing is embarrassingly parallel, and moving the html
-    bytes through a shuffle just to rearrange rows costs more than the
-    parse itself (measured: ~2s floor for 47 MB locally; at 100 TB it's
-    the whole job). Source parallelism (scan splits / pages_table's narrow
-    repartition) is the parallelism. part_id stays a logical column.
+def keyed_input(pages: DataFrame, n_partitions: int,
+                key=partitioning.with_partition_key) -> DataFrame:
+    """Project the columns the kernel reads and add part_id.
 
-    ``shuffle=True``: physically cluster by url hash first — only needed
-    when the input's partitioning is degenerate (one giant file) or for
-    the checkpointed path (engine.checkpoint shuffles per chunk)."""
-    if n_partitions is None:
-        n_partitions = pages.sparkSession.sparkContext.defaultParallelism * 2
+    (url, html) plus the optional per-document password column; ``key``
+    assigns part_id (with_partition_key, or the checkpoint's
+    spread_oversized). Column pruning keeps warc_ts/text/lang off the
+    Arrow boundary."""
     cols = ["url", "html"] + (["password"] if "password" in pages.columns
                               else [])
-    keyed = partitioning.with_partition_key(pages.select(*cols),
-                                            n_partitions)
-    if shuffle:
-        keyed = partitioning.repartition_for_extract(keyed, n_partitions)
+    return key(pages.select(*cols), n_partitions)
+
+
+def extract_keyed(keyed: DataFrame, with_spans: bool = False) -> DataFrame:
+    """Run keyed rows through the one batch kernel (mapInPandas).
+
+    ``keyed`` is keyed_input's frame or a row subset / placement of it
+    (the checkpoint's chunk filter and repartition)."""
     if with_spans:
         return keyed.mapInPandas(_extract_batches_with_spans,
                                  EXTRACTED_SPANS_SCHEMA)
     return keyed.mapInPandas(_extract_batches, EXTRACTED_SCHEMA)
+
+
+def run_extract(pages: DataFrame, n_partitions: int | None = None,
+                with_spans: bool = False) -> DataFrame:
+    """pages(url, warc_ts, html, text, lang) -> extracted DataFrame.
+
+    Plan shape: scan -> project(url, html) + part_id -> mapInPandas.
+
+    Extraction runs in the INPUT's partitions — per-document parsing is
+    embarrassingly parallel, and moving the html bytes through a shuffle
+    just to rearrange rows costs more than the parse itself (measured:
+    ~2s floor for 47 MB locally; at 100 TB it's the whole job). Source
+    parallelism (scan splits / pages_table's narrow repartition) is the
+    parallelism; part_id stays a logical column. The checkpointed path
+    (engine.checkpoint) is the one that shuffles, per chunk."""
+    if n_partitions is None:
+        n_partitions = pages.sparkSession.sparkContext.defaultParallelism * 2
+    return extract_keyed(keyed_input(pages, n_partitions), with_spans)
 
 
 def run_extract_fused(docs: DataFrame,

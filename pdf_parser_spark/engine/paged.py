@@ -5,12 +5,12 @@ The default job (engine.job) parses one document per row — a 10^9-byte
 document would stall its task. This variant splits the work at PAGE
 granularity:
 
-  mapInPandas  : doc bytes -> one row per page (page_number, page body
-                 text, header/footer, block/table counts) — pages of one
+  mapInPandas  : doc bytes -> one row per page (page_number, the page's
+                 rendered S5 chunk, block/table counts) — pages of one
                  doc can sit in different Arrow batches of one task;
-  applyInPandas: groupBy(url) re-assembly ordered by page_number ->
-                 formatted document text (identical bytes to the
-                 single-pass path — asserted in tests).
+  applyInPandas: groupBy(url) re-assembly: the chunks joined in
+                 page_number order (identical bytes to the single-pass
+                 path — asserted in tests).
 
 At 100 TB you'd route only length(html) > threshold docs through this
 path (the small-doc fast path avoids the extra shuffle); the grouped
@@ -32,9 +32,7 @@ PAGE_ROWS_SCHEMA = StructType([
     StructField("url", StringType()),
     StructField("page_number", IntegerType()),
     StructField("n_pages", IntegerType()),
-    StructField("page_text", StringType()),   # formatter items, page body
-    StructField("header", StringType()),
-    StructField("footer", StringType()),
+    StructField("text", StringType()),        # the page's S5 chunk
     StructField("n_blocks", IntegerType()),
     StructField("n_tables", IntegerType()),
     StructField("error_kind", StringType()),
@@ -64,31 +62,21 @@ def _page_rows(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
                 doc = parse_pdf_document(url, data)
             except PdfError:
                 rows.append({"url": url, "page_number": 1, "n_pages": 0,
-                             "page_text": None, "header": "", "footer": "",
-                             "n_blocks": 0, "n_tables": 0,
+                             "text": None, "n_blocks": 0, "n_tables": 0,
                              "error_kind": "PDFLoadError"})
                 continue
             except Exception:  # never abort the batch (E3 semantics,
                 # same contract as extract_document's InternalError row)
                 rows.append({"url": url, "page_number": 1, "n_pages": 0,
-                             "page_text": None, "header": "", "footer": "",
-                             "n_blocks": 0, "n_tables": 0,
+                             "text": None, "n_blocks": 0, "n_tables": 0,
                              "error_kind": "InternalError"})
                 continue
             for page in doc.pages:
-                items = formatter._collect_page_content(page)
-                items.sort(key=lambda x: (x[0], x[1]))
-                body = []
-                for _, _, content in items:
-                    body.append(content)
-                    body.append("")
                 rows.append({
                     "url": url,
                     "page_number": page.page_number,
                     "n_pages": len(doc.pages),
-                    "page_text": "\n".join(body),
-                    "header": page.header,
-                    "footer": page.footer,
+                    "text": "\n".join(formatter.render_page_plain(page)[0]),
                     "n_blocks": len(page.blocks),
                     "n_tables": len(page.tables),
                     "error_kind": None,
@@ -96,32 +84,15 @@ def _page_rows(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         yield pd.DataFrame(rows, columns=[f.name for f in PAGE_ROWS_SCHEMA])
 
 
-def _assemble(key, pdf: pd.DataFrame) -> pd.DataFrame:
-    """Re-create the S5 plain-text document from page rows (same bytes as
-    render.formatter.format_plain_text)."""
+def _assemble(key: tuple[str], pdf: pd.DataFrame) -> pd.DataFrame:
+    """Re-create the S5 plain-text document from its page chunks (same
+    bytes as render.formatter.format_plain_text)."""
     (url,) = key
-    if (pdf["error_kind"] == "PDFLoadError").any():
+    if pdf["error_kind"].notna().any():  # PDFLoadError / InternalError
         return pd.DataFrame([{"url": url, "text": None, "n_pages": 0,
                               "n_blocks": 0, "ok": "false"}])
     pdf = pdf.sort_values("page_number")
-    lines: list[str] = []
-    for r in pdf.itertuples():
-        lines.append("")
-        lines.append("=" * 80)
-        lines.append(f"{'PAGE ' + str(r.page_number):^80}")
-        lines.append("=" * 80)
-        lines.append("")
-        if r.header:
-            lines.append(f"[Header: {r.header}]")
-            lines.append("")
-        if r.page_text:
-            lines.append(r.page_text)
-        if r.footer:
-            lines.append("")
-            lines.append(f"[Footer: {r.footer}]")
-    # page_text already carries its trailing blank line; join mirrors the
-    # single-pass formatter exactly (verified byte-identical in tests)
-    text = "\n".join(lines)
+    text = "\n".join(pdf["text"])
     return pd.DataFrame([{
         "url": url,
         "text": text,

@@ -105,9 +105,3 @@ def repartition_for_extract(df: DataFrame, n_partitions: int,
     correctness needs the COLUMN to be stable, not task alignment
     (write.partitionBy routes rows to part_id dirs from any task)."""
     return df.repartition(n_partitions, F.col(url_col))
-
-
-def repartition_by_key(df: DataFrame, n_partitions: int) -> DataFrame:
-    """Deprecated alias kept for the checkpoint path; see
-    repartition_for_extract."""
-    return repartition_for_extract(df, n_partitions)

@@ -73,17 +73,6 @@ def parse_pdf_document(url: str, data: bytes, start_page: int = 1,
     return DocIR(pages=pages, metadata=meta, source_path=url)
 
 
-def _body_text(doc: DocIR) -> str:
-    """Concatenated page content in formatter order, without banners or
-    header/footer markers — the invariant-bearing payload."""
-    parts: list[str] = []
-    for page in doc.pages:
-        items = formatter._collect_page_content(page)
-        items.sort(key=lambda x: (x[0], x[1]))
-        parts.extend(content for _, _, content in items)
-    return "\n\n".join(parts)
-
-
 def _collect_spans(doc: DocIR, text: str) -> list[dict]:
     """Span rows with best-effort offsets into the formatted text.
 
@@ -115,7 +104,6 @@ def _collect_spans(doc: DocIR, text: str) -> list[dict]:
 
 
 def extract_document(url: str, data: bytes | None,
-                     fmt: str = formatter.PLAIN_TEXT,
                      with_spans: bool = False,
                      password: str | None = None) -> ExtractResult:
     """The flagship per-document operator. ``password`` opens
@@ -138,12 +126,19 @@ def extract_document(url: str, data: bytes | None,
             return ExtractResult(url=url, doc_type="pdf", text=None,
                                  body_text=None, error_kind="InternalError",
                                  error_message=repr(e))
-        text = formatter.format_document(doc, fmt)
+        # S5 text and the banner-free body in one pass over the pages
+        lines: list[str] = []
+        body: list[str] = []
+        for page in doc.pages:
+            page_lines, page_body = formatter.render_page_plain(page)
+            lines += page_lines
+            body += page_body
+        text = "\n".join(lines)
         return ExtractResult(
             url=url,
             doc_type="pdf",
             text=text,
-            body_text=_body_text(doc),
+            body_text="\n\n".join(body),
             n_pages=len(doc.pages),
             n_blocks=sum(len(p.blocks) for p in doc.pages),
             n_tables=sum(len(p.tables) for p in doc.pages),

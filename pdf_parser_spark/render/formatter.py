@@ -26,28 +26,32 @@ def format_document(doc: DocIR, fmt: str = PLAIN_TEXT,
 
 
 def format_plain_text(doc: DocIR) -> str:
-    """S5 (reference formatter.py:84-127): '='*80 banners, centered
-    'PAGE n', [Header:]/[Footer:] markers, items sorted (column, y1) asc,
-    blank line after every item."""
+    """S5 (reference formatter.py:84-127), page after page."""
     lines: list[str] = []
     for page in doc.pages:
-        lines.append("")
-        lines.append("=" * 80)
-        lines.append(f"{'PAGE ' + str(page.page_number):^80}")
-        lines.append("=" * 80)
-        lines.append("")
-        if page.header:
-            lines.append(f"[Header: {page.header}]")
-            lines.append("")
-        items = _collect_page_content(page)
-        items.sort(key=lambda x: (x[0], x[1]))
-        for _, _, content in items:
-            lines.append(content)
-            lines.append("")
-        if page.footer:
-            lines.append("")
-            lines.append(f"[Footer: {page.footer}]")
+        lines += render_page_plain(page)[0]
     return "\n".join(lines)
+
+
+def render_page_plain(page: PageIR) -> tuple[list[str], list[str]]:
+    """One S5 page: '='*80 banners, centered 'PAGE n', [Header:]/[Footer:]
+    markers, items sorted (column, y1) asc with a blank line after every
+    item. Returns the page's lines and its body items (blocks and tables
+    only, in the same order). The lines of consecutive pages concatenate
+    into the document, so newline-joining per-page chunks reproduces
+    format_plain_text byte for byte."""
+    items = _collect_page_content(page)
+    items.sort(key=lambda x: (x[0], x[1]))
+    body = [content for _, _, content in items]
+    lines = ["", "=" * 80, f"{'PAGE ' + str(page.page_number):^80}",
+             "=" * 80, ""]
+    if page.header:
+        lines += [f"[Header: {page.header}]", ""]
+    for content in body:
+        lines += [content, ""]
+    if page.footer:
+        lines += ["", f"[Footer: {page.footer}]"]
+    return lines, body
 
 
 def _collect_page_content(page: PageIR) -> list[tuple[int, float, str]]:

@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..engine import job, partitioning
+from ..engine import job
 from ..engine.source import PAGES_SCHEMA
 
 
@@ -32,11 +32,7 @@ def extract_stream(pages: DataFrame, n_partitions: int = 32) -> DataFrame:
     """Same kernel, same part_id semantics as the batch job — streaming
     micro-batches flow through the identical Arrow batches (including
     the optional per-document password column, like run_extract)."""
-    cols = ["url", "html"] + (["password"] if "password" in pages.columns
-                              else [])
-    keyed = partitioning.with_partition_key(pages.select(*cols),
-                                            n_partitions)
-    return keyed.mapInPandas(job._extract_batches, job.EXTRACTED_SCHEMA)
+    return job.extract_keyed(job.keyed_input(pages, n_partitions))
 
 
 def run_extract_stream(spark: SparkSession, input_dir: str, out_dir: str,

@@ -83,10 +83,10 @@ def batch_metrics(query) -> "pd.DataFrame":  # noqa: F821
     return pd.DataFrame(rows, columns=BATCH_COLUMNS)
 
 
-def write_batch_metrics(query, path: str) -> int:
-    """Append per-batch progress rows as JSONL (see
-    write_state_metrics)."""
-    df = batch_metrics(query)
+def _append_jsonl(df, path: str) -> int:
+    """Append ``df`` as one JSON line per row (append-only sidecar next
+    to the output/lineage dirs — the same pattern as checkpoint
+    lineage). Returns rows written."""
     if not len(df):
         return 0
     os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
@@ -94,17 +94,13 @@ def write_batch_metrics(query, path: str) -> int:
         f.write(df.to_json(orient="records", lines=True))
         f.write("\n")
     return len(df)
+
+
+def write_batch_metrics(query, path: str) -> int:
+    """Append per-batch progress rows as JSONL."""
+    return _append_jsonl(batch_metrics(query), path)
 
 
 def write_state_metrics(query, path: str) -> int:
-    """Append the query's state metrics as one JSON line per row
-    (append-only sidecar next to the output/lineage dirs — the same
-    pattern as checkpoint lineage). Returns rows written."""
-    df = state_metrics(query)
-    if not len(df):
-        return 0
-    os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
-    with open(path, "a") as f:
-        f.write(df.to_json(orient="records", lines=True))
-        f.write("\n")
-    return len(df)
+    """Append the query's state metrics as JSONL."""
+    return _append_jsonl(state_metrics(query), path)

@@ -1582,7 +1582,10 @@ def test_quality_counts_udf_matches_exprs(spark):
             (3, "punct!!! marks??? (everywhere); 100% -- yes."),
             (4, "ünï codé — em-dash … ellipsis"),
             (5, "中文，标点。 the of"), (6, "tabs\tand\nnewlines the"),
-            (7, "under_score digits123 mixed_99")]
+            (7, "under_score digits123 mixed_99"),
+            # astral (non-BMP) code points: Spark's length() counts code
+            # points, the kernel must too (not UTF-16 units)
+            (8, "a 😀😀 b!𐎄")]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     got = {r.doc_id: (r.n_tokens, r.stopword_hits, r.punct_chars,
                       r.mean_token_len, r.quality_score)
@@ -1600,3 +1603,4 @@ def test_quality_counts_udf_matches_exprs(spark):
     want = {r.doc_id: (r.nt, r.sh, r.pc) for r in exp.collect()}
     for did, (nt, sh, pc, _, _) in got.items():
         assert (nt, sh, pc) == want[did], (did, (nt, sh, pc), want[did])
+    assert got[8][2] == 4  # 😀 😀 ! 𐎄: one punct char per code point

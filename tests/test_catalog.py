@@ -681,6 +681,41 @@ def test_stale_seq_claim_reclaimed(spark, tmp_path):
         catalog._write_manifest(tdir, 3, "xyz", {"snapshot_id": "xyz"})
 
 
+def test_stale_claim_reclaim_race_leaves_no_orphan(tmp_path, monkeypatch):
+    """A reclaimer that renames a stale .seq-N aside and then loses the
+    retried link to a competing writer must still remove its renamed
+    .seq-N.<uuid> file (and its staged manifest)."""
+    import os
+    import time
+
+    import pytest
+
+    from pdf_parser_spark.engine import catalog
+
+    sdir = tmp_path / "tbl" / "snapshots"
+    sdir.mkdir(parents=True)
+    claim = str(sdir / ".seq-2")
+    with open(claim, "w") as f:
+        f.write("{}")
+    old = time.time() - 120
+    os.utime(claim, (old, old))        # stale: aged, no 2-*.json
+
+    real_rename = os.rename
+
+    def rename_then_competitor_claims(src, dst):
+        real_rename(src, dst)
+        if src == claim:               # competitor links .seq-2 first
+            with open(claim, "w") as f:
+                f.write("{}")
+
+    monkeypatch.setattr(os, "rename", rename_then_competitor_claims)
+    with pytest.raises(catalog.CommitConflict):
+        catalog._write_manifest(str(tmp_path / "tbl"), 2, "mine",
+                                {"snapshot_id": "mine"})
+    monkeypatch.undo()
+    assert sorted(os.listdir(sdir)) == [".seq-2"]
+
+
 def test_expire_removes_expired_seq_claims(spark, tmp_path):
     """Review finding (r5): expired snapshots' .seq-N claim hard links
     are removed too (they would otherwise pin the manifest content on

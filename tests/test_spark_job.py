@@ -329,3 +329,35 @@ def test_spread_oversized_duplicate_urls_row_preserving(spark):
     dup_parts = [r.part_id for r in
                  keyed.filter("url = 'dup'").collect()]
     assert len(dup_parts) == 2 and dup_parts[0] == dup_parts[1]
+
+
+def test_extraction_paths_agree(spark, tmp_path):
+    """The batch, checkpointed and streaming plans share one plan builder
+    and one batch kernel: at equal n_partitions they return identical
+    rows, and with_spans=True only adds the spans column."""
+    from pdf_parser_spark.engine import checkpoint, job, source
+    from pdf_parser_spark.streaming.job import extract_stream
+
+    pages = source.pages_table(spark, SF0001, n_partitions=4)
+    cols = [f.name for f in job.EXTRACTED_SCHEMA]
+    batch = job.run_extract(pages, n_partitions=8).select(*cols).cache()
+    root = str(tmp_path / "ckpt")
+    checkpoint.run_checkpointed(spark, pages, root, "s", n_partitions=8,
+                                chunk_size=4)
+    others = {
+        "checkpointed": checkpoint.read_committed(spark, root, "s")
+                                  .drop("snapshot_id"),
+        "stream": extract_stream(pages, n_partitions=8),
+        "spans": job.run_extract(pages, n_partitions=8, with_spans=True)
+                    .drop("spans"),
+    }
+    try:
+        n = batch.count()
+        assert n == 500
+        for name, df in others.items():
+            df = df.select(*cols)
+            assert df.count() == n, name
+            assert df.exceptAll(batch).count() == 0, name
+            assert batch.exceptAll(df).count() == 0, name
+    finally:
+        batch.unpersist()
