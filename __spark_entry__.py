@@ -34,8 +34,8 @@ _ROUNDTRIP_SCHEMA = StructType([
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: synthesize the Common-Crawl-style pages table from
-    sf0.001 documents, run the full extraction job (url-hash + skew-salted
-    shuffle -> mapInPandas tokenizer/layout/formatter), return the
+    sf0.001 documents, run the full extraction job (url-hash
+    part_id -> mapInPandas tokenizer/layout/formatter), return the
     extracted table."""
     from pdf_parser_spark.engine import job, source
 
@@ -365,9 +365,9 @@ def _q_bpe_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Real BPE token counts (committed merges table, greedy merge
     loop in an Arrow-batched UDF) + whitespace/regex proxies; the
     DuckDB oracle REPLAYS the same merges with a recursive CTE."""
-    from pdf_parser_spark.analytics import text as T
+    from pdf_parser_spark.analytics import bpe
 
-    return T.bpe_token_counts(_docs(spark, sf_dir))
+    return bpe.bpe_token_counts(_docs(spark, sf_dir))
 
 
 def _q_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -3,11 +3,14 @@
 Usage:
   spark-submit --py-files dist/pdf_parser_spark.zip jobs/extract.py \
       --sf-dir /root/testdata/sf0.001 --out /tmp/extract_out \
-      --snapshot snap-001 [--partitions 32] [--chunk-size 8] [--resume]
+      --snapshot snap-001 [--partitions 32] [--chunk-size 8]
 
-Writes:  <out>/data/part_id=*/   extracted rows
-         <out>/lineage/          per-partition lineage rows
-         <out>/manifest/         commit log (presence = partition complete)
+Writes:  <out>/data/snapshot_id=*/part_id=*/     extracted rows
+         <out>/lineage/snapshot_id=*/part_id=*/  per-partition lineage rows
+         <out>/manifest/  (snapshot_id, part_id) commit log
+                          (presence = partition complete)
+         <out>/_layout    part_id rule + --partitions (resume refuses a
+                          root stamped with another)
 
 A killed job re-run with the same --snapshot resumes from the manifest
 without reprocessing completed partitions (north rule).
@@ -34,10 +37,6 @@ def main() -> None:
     ap.add_argument("--replicate", type=int, default=1)
     ap.add_argument("--fail-after-chunks", type=int, default=None,
                     help="test hook: simulate a kill after N chunks")
-    ap.add_argument("--spread-big", action="store_true",
-                    help="deterministic round-robin part_ids for "
-                         "oversized docs (guaranteed ceil(k/n) per "
-                         "partition; see BENCH/SKEW.md)")
     ap.add_argument("--password", default=None,
                     help="password for protected PDFs, applied to every "
                          "document (reference cli.py:77 parity); a pages "
@@ -58,8 +57,7 @@ def main() -> None:
     checkpoint.run_checkpointed(
         spark, pages, args.out, args.snapshot,
         n_partitions=args.partitions, chunk_size=args.chunk_size,
-        fail_after_chunks=args.fail_after_chunks,
-        spread_big=args.spread_big)
+        fail_after_chunks=args.fail_after_chunks)
 
     done = checkpoint.completed_partitions(spark, args.out, args.snapshot)
     committed = checkpoint.read_committed(spark, args.out, args.snapshot)

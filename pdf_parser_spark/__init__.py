@@ -14,8 +14,8 @@ idiomatic Spark pipeline over Common-Crawl-style page tables:
                  programs; every threshold cites the reference file:line.
 * ``render``   — plain-text / markdown / JSON formatters and the ASCII
                  table renderer (byte-level parity with the reference).
-* ``engine``   — the Spark side: sources, url-hash + skew-salted
-                 partitioning, mapInPandas extraction job, parquet-emulated
+* ``engine``   — the Spark side: sources, url-hash part_id,
+                 mapInPandas extraction job, parquet-emulated
                  snapshot/manifest checkpointing, lineage metrics.
 * ``analytics``— web-scale corpus ops: dedup (exact / minhash-LSH /
                  simhash / n-gram jaccard), embedding similarity search,

@@ -30,6 +30,7 @@ from __future__ import annotations
 import hashlib
 import re
 from collections.abc import Iterator
+from itertools import chain
 
 import numpy as np
 import pandas as pd
@@ -108,55 +109,16 @@ def _java_tokens(t: str) -> list[str]:
     return _JAVA_WS_RE.split(s)
 
 
-def _sh_np(text: str | None, n: int, memo: dict) -> np.ndarray | None:
-    """Hashed token n-gram shingles of one document (int64 numpy array;
-    same values as the expression pipeline in the module docstring)."""
-    if text is None:
-        return None
-    toks = _java_tokens(text)
-    th = np.empty(len(toks), dtype=np.int64)
-    get = memo.get
-    for i, tok in enumerate(toks):
-        v = get(tok)
-        if v is None:
-            if len(memo) > _MEMO_CAP:
-                memo.clear()
-            v = memo[tok] = (int.from_bytes(
-                hashlib.md5(tok.encode("utf-8")).digest()[:8], "big") >> 4)
-        th[i] = v
-    if len(th) >= n:
-        m = len(th) - n + 1
-        thp = th % P
-        z = thp[:m].copy()
-        for k in range(1, n):
-            z *= 31
-            z += thp[k:k + m]
-            z %= P
-        return z
-    return th[:1] % P
-
-
-def _sh_batch(texts, n: int, memo: dict,
-              distinct: bool) -> list:
-    """Batch form of ``_sh_np``: one flat vectorized pass over every
-    document in the batch (identical values). Tokens are integer-coded
-    with ``pd.factorize`` so md5 runs once per DISTINCT token (plus the
-    cross-batch memo); the rolling n-gram combine and the per-row
-    distinct reduction run as single numpy passes over the concatenated
-    token stream — no per-row Python beyond the regex split. Measured
-    ~5x the per-row ``_sh_np`` loop (which itself was ~50x the
-    interpreted expression form)."""
-    idxs = [i for i, t in enumerate(texts) if t is not None]
-    tok_lists = [_java_tokens(texts[i]) for i in idxs]
-    out: list = [None] * len(texts)
-    if not idxs:
-        return out
+def _token_hashes(texts, memo: dict) -> tuple[np.ndarray, np.ndarray]:
+    """Per-document token counts and the flat md5-60 hash of every token
+    occurrence, over the concatenated token stream of ``texts`` (no
+    None). Tokens are integer-coded with ``pd.factorize`` so md5 runs
+    once per DISTINCT token (plus the cross-batch ``memo``)."""
+    tok_lists = [_java_tokens(t) for t in texts]
     lens = np.fromiter(map(len, tok_lists), dtype=np.int64,
                        count=len(tok_lists))
-    total = int(lens.sum())
-    from itertools import chain
     flat = np.fromiter(chain.from_iterable(tok_lists), dtype=object,
-                       count=total)
+                       count=int(lens.sum()))
     codes, uniq = pd.factorize(flat)
     hv = np.empty(len(uniq), dtype=np.int64)
     get = memo.get
@@ -168,7 +130,23 @@ def _sh_batch(texts, n: int, memo: dict,
             v = memo[tok] = (int.from_bytes(
                 hashlib.md5(tok.encode("utf-8")).digest()[:8], "big") >> 4)
         hv[k] = v
-    thp = hv[codes] % P
+    return lens, hv[codes]
+
+
+def _sh_batch(texts, n: int, memo: dict,
+              distinct: bool) -> list:
+    """Hashed token n-gram shingles of every document in the batch (int64
+    numpy arrays; same values as the expression pipeline in the module
+    docstring), None for a None text. One flat vectorized pass: the
+    rolling n-gram combine and the per-row distinct reduction run as
+    single numpy passes over the concatenated token stream — no per-row
+    Python beyond the regex split."""
+    idxs = [i for i, t in enumerate(texts) if t is not None]
+    out: list = [None] * len(texts)
+    if not idxs:
+        return out
+    lens, th = _token_hashes([texts[i] for i in idxs], memo)
+    thp = th % P
 
     starts = np.zeros(len(lens), dtype=np.int64)
     np.cumsum(lens[:-1], out=starts[1:])
@@ -441,30 +419,11 @@ def _simhash_udf(bits: int):
     @F.pandas_udf("bigint")
     def sh(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
         memo: dict = {}
-        get = memo.get
         for col in it:
             if not len(col):
                 yield pd.Series([], dtype="int64")
                 continue
-            tok_lists = [_java_tokens(t) for t in col]
-            lens = np.fromiter(map(len, tok_lists), dtype=np.int64,
-                               count=len(tok_lists))
-            from itertools import chain
-            total = int(lens.sum())
-            flat = np.fromiter(chain.from_iterable(tok_lists),
-                               dtype=object, count=total)
-            codes, uniq = pd.factorize(flat)
-            hv = np.empty(len(uniq), dtype=np.int64)
-            for k, tok in enumerate(uniq):
-                v = get(tok)
-                if v is None:
-                    if len(memo) > _MEMO_CAP:
-                        memo.clear()
-                    v = memo[tok] = (int.from_bytes(
-                        hashlib.md5(tok.encode("utf-8")).digest()[:8],
-                        "big") >> 4)
-                hv[k] = v
-            th = hv[codes]
+            lens, th = _token_hashes(col, memo)
             votes = (((th[:, None] >> shifts) & 1) * 2 - 1)
             starts = np.zeros(len(lens), dtype=np.int64)
             np.cumsum(lens[:-1], out=starts[1:])
@@ -550,7 +509,7 @@ def contamination(docs: DataFrame, text_col: str = "text",
             shn = _sh_batch(col.tolist(), n, memo, False)
             lens = np.fromiter((len(a) for a in shn), dtype=np.int64,
                                count=len(shn))
-            # _sh_np guarantees >= 1 shingle per row, so the reduceat
+            # _sh_batch guarantees >= 1 shingle per row, so the reduceat
             # segments are never empty
             flat = np.concatenate(shn)
             mask = np.isin(flat, bench).astype(np.int64)

@@ -190,17 +190,6 @@ def quality_features(docs: DataFrame, text_col: str = "text") -> DataFrame:
         "doc_id", *[c.alias(n) for n, c in exprs.items()])
 
 
-def bpe_token_counts(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """Token counts for corpus sizing — real BPE (see analytics/bpe.py:
-    committed merges table + greedy merge loop, DuckDB-replayable)
-    plus whitespace and pre-tokenizer-regex counts. Kept here as a
-    re-export so text-analytics callers find it next to the other
-    per-doc signals."""
-    from . import bpe
-
-    return bpe.bpe_token_counts(docs, text_col)
-
-
 def repetition_features(docs: DataFrame,
                         text_col: str = "text") -> DataFrame:
     """Gopher-style repetition quality signals, fully expression-level

@@ -9,8 +9,8 @@ Each documents.parquet row becomes one page row:
   lang     = documents.lang
 
 Skew fixture (FIXTURES.md §1): every 500th doc's body text is repeated
-SKEW_FACTOR times, producing a deterministic heavy tail that exercises the
-size-bucket salting in engine.partitioning.
+SKEW_FACTOR times, producing a deterministic heavy tail of per-document
+parse cost.
 
 PDF layout contract (why 38-char wrap / 14pt leading / x0=72): lines must
 stay outside the reference's center "wide band" (page.py:183: boundary

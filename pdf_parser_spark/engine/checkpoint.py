@@ -3,16 +3,17 @@ parquet (SURVEY.md §7.0 — no Iceberg jar in the sandbox; the API is kept
 behind this module so a real catalog drops in on a cluster).
 
 Layout under ``root``:
-  data/part_id=<k>/*.parquet   extracted rows for completed partition k
-  lineage/*.parquet            one lineage row per completed partition
-  manifest/*.parquet           (snapshot_id, part_id, committed_at rank)
+  _layout                                      part_id rule + n_partitions
+  data/snapshot_id=<s>/part_id=<k>/*.parquet   extracted rows
+  lineage/snapshot_id=<s>/part_id=<k>/         one lineage row per partition
+  manifest/*.parquet                           (snapshot_id, part_id) rows
 
 Commit protocol (north rule "resumable from checkpoint"): for each chunk
 of partition-ids we (1) write data, (2) write lineage, (3) append the
 manifest rows LAST. A row in the manifest therefore guarantees its data
-is fully on disk. Resume = left_anti join of the source's stable part_id
-against the manifest — already-committed partitions are never reprocessed
-(verified by tests/test_resume.py).
+is fully on disk. Resume skips the part_ids already in the manifest for
+this snapshot — committed partitions are never reprocessed (verified by
+tests/test_spark_job.py::test_checkpoint_resume).
 """
 
 from __future__ import annotations
@@ -22,25 +23,18 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from . import job, partitioning
+from . import job
 
 
 # Partition-layout identity. part_id values are a pure function of the
-# data ONLY within one (rule, n_partitions, big_bytes) generation — if
-# the assignment rule changes (as it did in round 4: dedicated salt
-# range -> full-range seeded stream), OR the same rule runs with a
-# different --partitions / size threshold, a manifest written under the
-# old parameters must NOT be resumed under the new ones: recomputed
-# part_ids would silently skip docs that moved into already-committed
-# partitions. The FULL layout string (rule + parameters) is recorded
-# next to the manifest and checked on resume.
-LAYOUT_HASH = "v3-fullrange-salt"
-LAYOUT_RR = "v3-roundrobin-big"
-
-
-def _layout_id(spread_big: bool, n_partitions: int) -> str:
-    rule = LAYOUT_RR if spread_big else LAYOUT_HASH
-    return f"{rule}/n={n_partitions}/big={partitioning.DEFAULT_BIG_BYTES}"
+# data only within one (rule, n_partitions) pair: if the rule changes
+# (job.PART_ID_LAYOUT) or the same rule runs with a different
+# --partitions, a manifest written under the old pair must NOT be
+# resumed under the new one — recomputed part_ids would silently skip
+# docs that moved into already-committed partitions. The layout string
+# is recorded next to the manifest and checked on resume.
+def _layout_id(n_partitions: int) -> str:
+    return f"{job.PART_ID_LAYOUT}/n={n_partitions}"
 
 
 def _layout_path(root: str) -> str:
@@ -58,8 +52,7 @@ def _check_layout(root: str, layout: str) -> None:
                 f"layout {existing!r}, current run uses {layout!r} — "
                 f"resuming would recompute part_ids under a different "
                 f"rule and silently skip or duplicate documents; start "
-                f"a fresh --out/--snapshot (or rerun with the original "
-                f"layout)")
+                f"a fresh --out/--snapshot")
         return
     # No _layout file: only safe if the root is genuinely fresh. A root
     # that already holds a manifest or data dir predates layout stamping
@@ -108,8 +101,7 @@ def completed_partitions(spark: SparkSession, root: str,
 def run_checkpointed(spark: SparkSession, pages: DataFrame, root: str,
                      snapshot_id: str, n_partitions: int = 32,
                      chunk_size: int = 8,
-                     fail_after_chunks: int | None = None,
-                     spread_big: bool = False) -> None:
+                     fail_after_chunks: int | None = None) -> None:
     """Run extraction with per-chunk commits. ``fail_after_chunks`` lets
     tests simulate a killed job mid-run.
 
@@ -117,15 +109,8 @@ def run_checkpointed(spark: SparkSession, pages: DataFrame, root: str,
     of iterations), not rows — each iteration is one distributed job over
     ~total/chunks of the data. Commit granularity is the recovery unit;
     at 10^12 docs you'd size chunks so one chunk ~= 10-30 min of work."""
-    # spread_big: deterministic round-robin part_ids for oversized docs
-    # (guaranteed <= ceil(k/n) per partition vs the hash stream's
-    # birthday bound — measured 1.7-2.8x straggler win in
-    # tools/skew_bench.py); costs a window over the big subset, so it's
-    # opt-in for corpora whose tail is heavy enough to matter
-    _check_layout(root, _layout_id(spread_big, n_partitions))
-    keyed = job.keyed_input(pages, n_partitions,
-                            key=(partitioning.spread_oversized if spread_big
-                                 else partitioning.with_partition_key))
+    _check_layout(root, _layout_id(n_partitions))
+    keyed = job.keyed_input(pages, n_partitions)
 
     done = set(completed_partitions(spark, root, snapshot_id))
     todo = [p for p in range(n_partitions) if p not in done]
@@ -149,10 +134,14 @@ def run_checkpointed(spark: SparkSession, pages: DataFrame, root: str,
                 return  # simulated kill: this chunk's manifest not written
             subset = keyed.filter(F.col("part_id").isin(chunk))
             # spread the chunk across the whole cluster, not len(chunk)
-            # tasks
-            shuffled = partitioning.repartition_for_extract(
-                subset, max(len(chunk),
-                            spark.sparkContext.defaultParallelism))
+            # tasks. Hash the high-cardinality url, not part_id: a few
+            # distinct part_ids hashed into many buckets occupy only some
+            # of them (balls-in-bins), while url fills every bucket.
+            # part_id stays the logical manifest key — partitionBy routes
+            # rows to part_id dirs from any task.
+            shuffled = subset.repartition(
+                max(len(chunk), spark.sparkContext.defaultParallelism),
+                F.col("url"))
             extracted = job.extract_keyed(shuffled)
             # One pass over the data: cache the chunk output, derive
             # lineage from it, then release.

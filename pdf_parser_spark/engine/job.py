@@ -18,7 +18,6 @@ from pyspark.sql.types import (
 )
 
 from ..extractor import extract_document
-from . import partitioning
 
 EXTRACTED_SCHEMA = StructType([
     StructField("url", StringType()),
@@ -117,17 +116,25 @@ def _extract_batches_with_spans(batches: Iterator[pd.DataFrame]
     return _extract_batches(batches, with_spans=True)
 
 
-def keyed_input(pages: DataFrame, n_partitions: int,
-                key=partitioning.with_partition_key) -> DataFrame:
+# part_id rule, written once: the layout tag names it, so a rule change
+# edits both here and checkpoints written under the old rule refuse to
+# resume (engine.checkpoint._check_layout).
+PART_ID_LAYOUT = "v4-urlhash"
+
+
+def keyed_input(pages: DataFrame, n_partitions: int) -> DataFrame:
     """Project the columns the kernel reads and add part_id.
 
-    (url, html) plus the optional per-document password column; ``key``
-    assigns part_id (with_partition_key, or the checkpoint's
-    spread_oversized). Column pruning keeps warc_ts/text/lang off the
-    Arrow boundary."""
+    (url, html) plus the optional per-document password column, and
+    part_id, the url's hash mod ``n_partitions``: a pure function of
+    the url, so it is stable across runs and cluster sizes (what makes
+    the checkpoint manifest resumable). part_id is a logical column and
+    the checkpoint's chunk key; it does not place rows on tasks. Column
+    pruning keeps warc_ts/text/lang off the Arrow boundary."""
     cols = ["url", "html"] + (["password"] if "password" in pages.columns
                               else [])
-    return key(pages.select(*cols), n_partitions)
+    part_id = F.pmod(F.xxhash64("url"), F.lit(n_partitions)).cast("int")
+    return pages.select(*cols, part_id.alias("part_id"))
 
 
 def extract_keyed(keyed: DataFrame, with_spans: bool = False) -> DataFrame:

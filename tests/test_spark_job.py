@@ -29,74 +29,45 @@ def test_lineage(spark):
     ext.unpersist()
 
 
-def test_partition_key_stability(spark):
-    """part_id must be a pure function of the data (url), independent of
-    cluster size — the property the resume manifest relies on."""
-    from pdf_parser_spark.engine import partitioning, source
+def test_partition_key_stability(spark, tmp_path):
+    """part_id = pmod(xxhash64(url), n) on every row, whatever the
+    document's size — a pure function of the url, independent of
+    cluster size (the property the resume manifest relies on) — and
+    the batch, checkpointed and streaming paths all carry it."""
+    from pdf_parser_spark.engine import checkpoint, job, source
+    from pdf_parser_spark.streaming.job import extract_stream
 
-    pages = source.pages_table(spark, SF0001).select("url", "html")
-    a = partitioning.with_partition_key(pages, 32).select("url", "part_id")
-    b = partitioning.with_partition_key(
-        pages.repartition(3), 32).select("url", "part_id")
+    n = 8
+    big = ("<html><body>" + ("<p>" + "alpha beta gamma delta " * 50
+                             + "</p>\n") * 1000 + "</body></html>").encode()
+    assert len(big) > 1_000_000
+    bigs = spark.createDataFrame(
+        [("crawl://big%d" % i, bytearray(big)) for i in range(4)],
+        "url string, html binary")
+    pages = (source.pages_table(spark, SF0001, n_partitions=4)
+             .select("url", "html").unionByName(bigs))
+
+    a = job.keyed_input(pages, 32).select("url", "part_id")
+    b = job.keyed_input(pages.repartition(3), 32).select("url", "part_id")
     diff = a.join(b.withColumnRenamed("part_id", "p2"), "url") \
             .filter("part_id <> p2").count()
     assert diff == 0
 
-
-def test_skew_salting_routes_big_docs(spark):
-    """Oversized docs are re-keyed on an independent hash stream over
-    the FULL range (big-big co-location is the straggler; sharing with
-    smalls is cheap — see partitioning module docstring + skew bench)."""
-    from pyspark.sql import functions as F
-
-    from pdf_parser_spark.engine import partitioning
-
-    rows = [("u%d" % i, bytearray(100)) for i in range(100)]
-    rows += [("big%d" % i, bytearray(1_000_000)) for i in range(8)]
-    df = spark.createDataFrame(rows, "url string, html binary")
-    keyed = partitioning.with_partition_key(df, 32, big_bytes=10_000)
-    big_parts = [r.part_id for r in
-                 keyed.filter("url LIKE 'big%'").orderBy("url")
-                 .select("part_id").collect()]
-    # big part_ids come from the SEEDED stream, not the small-doc hash
-    # (a single url can coincide 1/n of the time; the vector cannot)
-    unsalted = df.withColumn(
-        "part_id",
-        F.pmod(F.xxhash64("url"), F.lit(32)).cast("int"))
-    plain_parts = [r.part_id for r in
-                   unsalted.filter("url LIKE 'big%'").orderBy("url")
-                   .select("part_id").collect()]
-    assert big_parts != plain_parts
-    assert all(0 <= p < 32 for p in big_parts)
-    assert keyed.agg(F.max("part_id")).collect()[0][0] < 32
-    # determinism: identical corpus -> identical assignment
-    again = partitioning.with_partition_key(df, 32, big_bytes=10_000)
-    assert keyed.collect() == again.collect()
-
-
-def test_spread_oversized_round_robin(spark):
-    """spread_oversized guarantees <= ceil(k/n) big docs per partition
-    (hashing only promises it in expectation): 6 planted big docs over
-    32 partitions land in 6 DISTINCT partitions, deterministically."""
-    from pyspark.sql import functions as F
-
-    from pdf_parser_spark.engine import partitioning
-
-    rows = [("u%d" % i, bytearray(100)) for i in range(200)]
-    rows += [("big%d" % i, bytearray(20_000)) for i in range(6)]
-    df = spark.createDataFrame(rows, "url string, html binary")
-    keyed = partitioning.spread_oversized(df, 32, big_bytes=10_000)
-    per_part = (keyed.where(F.length("html") > 10_000)
-                .groupBy("part_id").count().collect())
-    assert len(per_part) == 6
-    assert max(r["count"] for r in per_part) == 1
-    # small docs unaffected: full-range hash
-    assert keyed.agg(F.max("part_id")).collect()[0][0] < 32
-    # deterministic across invocations (resume-stable part_id)
-    again = partitioning.spread_oversized(df, 32, big_bytes=10_000)
-    a = sorted(map(tuple, keyed.select("url", "part_id").collect()))
-    b = sorted(map(tuple, again.select("url", "part_id").collect()))
-    assert a == b
+    root = str(tmp_path / "ckpt")
+    checkpoint.run_checkpointed(spark, pages, root, "s", n_partitions=n,
+                                chunk_size=n)
+    outputs = {
+        "run_extract": job.run_extract(pages, n_partitions=n),
+        "checkpointed": checkpoint.read_committed(spark, root, "s"),
+        "stream": extract_stream(pages, n_partitions=n),
+    }
+    off_rule = F.col("part_id") != F.pmod(F.xxhash64("url"), F.lit(n))
+    for name, df in outputs.items():
+        rows, bigs, off = df.agg(
+            F.count("*"),
+            F.sum((F.col("bytes_in") > 1_000_000).cast("int")),
+            F.sum(off_rule.cast("int"))).first()
+        assert (rows, bigs, off) == (504, 4, 0), name
 
 
 def test_checkpoint_resume(spark, tmp_path):
@@ -219,26 +190,31 @@ def test_resume_after_mid_chunk_kill(spark, tmp_path):
 
 
 def test_checkpoint_refuses_foreign_partition_layout(spark, tmp_path):
-    """A manifest written under one part_id layout must not resume under
-    another — recomputed part_ids would silently skip documents that
-    moved into already-committed partitions."""
+    """A manifest written under another part_id rule (here the former
+    size-salted one) must not resume under the current rule —
+    recomputed part_ids would silently skip documents that moved into
+    already-committed partitions."""
+    import os
+
     import pytest
 
-    from pdf_parser_spark.engine import checkpoint, source
+    from pdf_parser_spark.engine import checkpoint, job, source
     from tests.conftest import SF0001
 
     root = str(tmp_path / "layout_ck")
     pages = source.pages_table(spark, SF0001, n_partitions=4)
     checkpoint.run_checkpointed(spark, pages, root, "s1", n_partitions=4,
                                 chunk_size=2, fail_after_chunks=1)
-    with pytest.raises(ValueError, match="partition layout"):
+    stamp = os.path.join(root, "_layout")
+    with open(stamp) as f:
+        assert f.read() == f"{job.PART_ID_LAYOUT}/n=4"
+    with open(stamp, "w") as f:
+        f.write("v3-fullrange-salt/n=4/big=16000")
+    with pytest.raises(ValueError, match="partition layout") as err:
         checkpoint.run_checkpointed(spark, pages, root, "s1",
-                                    n_partitions=4, chunk_size=2,
-                                    spread_big=True)
-    # same layout resumes fine
-    checkpoint.run_checkpointed(spark, pages, root, "s1", n_partitions=4,
-                                chunk_size=2)
-    assert len(checkpoint.completed_partitions(spark, root, "s1")) == 4
+                                    n_partitions=4, chunk_size=2)
+    assert str(err.value).endswith("start a fresh --out/--snapshot")
+    assert len(checkpoint.completed_partitions(spark, root, "s1")) == 2
 
 
 def test_checkpoint_refuses_legacy_root_without_layout(spark, tmp_path):
@@ -263,7 +239,7 @@ def test_checkpoint_refuses_legacy_root_without_layout(spark, tmp_path):
                                     n_partitions=4, chunk_size=2)
     # restoring the original layout record re-enables resume
     with open(os.path.join(root, "_layout"), "w") as f:
-        f.write(checkpoint._layout_id(False, 4))
+        f.write(checkpoint._layout_id(4))
     checkpoint.run_checkpointed(spark, pages, root, "s1", n_partitions=4,
                                 chunk_size=2)
     assert len(checkpoint.completed_partitions(spark, root, "s1")) == 4
@@ -313,22 +289,6 @@ def test_read_committed_empty_root(spark, tmp_path):
 
     root = str(tmp_path / "empty_ck")
     assert checkpoint.read_committed(spark, root, "s1").count() == 0
-
-
-def test_spread_oversized_duplicate_urls_row_preserving(spark):
-    """A re-crawled url captured twice (both oversized) must not fan out
-    through the rank join-back: one rank per DISTINCT url, both rows
-    kept, same part_id."""
-    from pdf_parser_spark.engine import partitioning
-
-    rows = [("u%d" % i, bytearray(100)) for i in range(20)]
-    rows += [("dup", bytearray(20_000)), ("dup", bytearray(20_000))]
-    df = spark.createDataFrame(rows, "url string, html binary")
-    keyed = partitioning.spread_oversized(df, 8, big_bytes=10_000)
-    assert keyed.count() == 22
-    dup_parts = [r.part_id for r in
-                 keyed.filter("url = 'dup'").collect()]
-    assert len(dup_parts) == 2 and dup_parts[0] == dup_parts[1]
 
 
 def test_extraction_paths_agree(spark, tmp_path):

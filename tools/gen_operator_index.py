@@ -20,7 +20,6 @@ MODULES = [
     ("pdf_parser_spark.engine.paged", "Oversized-document split"),
     ("pdf_parser_spark.engine.checkpoint", "Checkpoint / resume"),
     ("pdf_parser_spark.engine.catalog", "Snapshot catalog (Iceberg-style)"),
-    ("pdf_parser_spark.engine.partitioning", "Partitioning & skew"),
     ("pdf_parser_spark.engine.source", "Sources"),
     ("pdf_parser_spark.analytics.dedup", "Deduplication"),
     ("pdf_parser_spark.analytics.similarity", "Similarity / ANN"),

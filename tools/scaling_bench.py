@@ -292,11 +292,6 @@ moved the gate to 2->8 for the bandwidth-envelope reason above, with
 all pairs still reported. The machine-readable gate pair is recorded as
 ``passes_pair`` in the JSON next to ``passes``.
 
-## Skew stress (oversized-doc spreading)
-
-See BENCH/SKEW.md (written by tools/skew_bench.py — straggler cost of
-big-doc co-location under hash vs deterministic round-robin part_ids).
-
 ## Reference baseline
 
 The reference publishes no benchmark numbers (SURVEY.md §6) and is
